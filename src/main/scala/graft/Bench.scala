@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   *    are attributable (a Map's hash order scrambled attribution);
   *  - the shared caches (dedup frames, k-means model, fixture corpus
   *    store) are pre-built as separately-timed `cache_*` line items
-  *    instead of being charged to whichever query touches a registry
+  *    instead of being charged to whichever query touches the store
   *    first;
   *  - ADAPTIVE run count (round-16: 291 entries × median-of-3 blew the
   *    driver's bench wall cap — BENCH_r15 rc=124): one timed run is
@@ -243,13 +243,7 @@ object Bench {
       } catch { case e: Throwable =>
         System.err.println(s"[bench] JIT pre-warm failed (non-fatal): $e")
       }
-      graft.ext.DedupOps.clearCaches()
-      graft.ext.SimilarityOps.clearCaches()
-      graft.graph.GraphOps.clearCaches()
-      graft.ext.Multimodal.clearCaches()
-      graft.operators.Sketches.clearCaches()
-      graft.ext.TextOps.clearModelSegs()
-      graft.query.FixtureCorpus.clear()
+      SessionStore.clearAll()
     }
     shuffleProbeSecs(spark) // discard: first probe run carries its JIT
     val probeStart = shuffleProbeSecs(spark)
@@ -258,25 +252,25 @@ object Bench {
     val cacheDefs: Seq[(String, () => Unit, () => Unit)] = Seq(
       ("cache_dedup_frames",
         () => graft.ext.DedupOps.warm(spark, sfDir),
-        // frames-only targeted clear: clearCaches() would also evict
-        // the d70 window index and make list ORDER load-bearing
-        () => graft.ext.DedupOps.clearFrames()),
+        // frames-only targeted drop: the "windex" family (the d70
+        // window index) stays, so list ORDER is not load-bearing
+        () => SessionStore.drop("dedup")),
       ("cache_kmeans_model",
         () => graft.ext.SimilarityOps.warm(spark, sfDir),
-        () => graft.ext.SimilarityOps.clearCaches()),
+        () => SessionStore.drop("kmeans", "pq")),
       ("cache_graph_edges",
         () => graft.graph.GraphOps.warm(spark, sfDir),
-        () => graft.graph.GraphOps.clearCaches()),
+        () => SessionStore.drop("graph")),
       ("cache_fixture_corpus",
         () => { graft.query.FixtureCorpus.store(spark, sfDir).count(); () },
-        () => graft.query.FixtureCorpus.clear()),
+        () => SessionStore.drop("fixture")),
       // the g90/g107-shared GraphX thread assignment (ONE CC run, the
       // cache_semantic_cc discipline) — placed after the fixture-corpus
       // warm it reads, with a targeted clear
       ("cache_email_threads",
         () => { graft.graph.GraphOps.emailThreadAssignment(spark, sfDir)
           .count(); () },
-        () => graft.graph.GraphOps.clearEmailThreads()),
+        () => SessionStore.drop("graph/email_threads")),
       // em71's on-disk corpus + full ingest and s81's incremental index
       // build are cached per (session, dir) like the frames above —
       // timed here so their one-time cost is an attributed line item
@@ -286,86 +280,85 @@ object Bench {
       // store/models.
       ("cache_em71_ingest",
         () => { graft.query.EmailOps.realIngest(spark, sfDir).count(); () },
-        () => graft.query.FixtureCorpus.clearAux("em71")),
+        () => SessionStore.drop("fixture/em71")),
       ("cache_em72_http",
         () => { graft.query.EmailOps.httpIngest(spark, sfDir).count(); () },
-        () => graft.query.FixtureCorpus.clearAux("em72")),
+        () => SessionStore.drop("fixture/em72")),
       ("cache_em73_compaction",
         () => { graft.query.EmailOps.compactedStore(spark, sfDir)
           .count(); () },
-        () => graft.query.FixtureCorpus.clearAux("em73")),
+        () => SessionStore.drop("fixture/em73")),
       ("cache_em74_retention",
         () => { graft.query.EmailOps.retainedStore(spark, sfDir)
           .count(); () },
-        () => graft.query.FixtureCorpus.clearAux("em74")),
+        () => SessionStore.drop("fixture/em74")),
       // shared semantic-CC assignment (g103 + d62 serve from it) and
       // shared media signature frame (m78/m79/e112)
       ("cache_semantic_cc",
         () => { graft.graph.GraphOps.semanticComponentsCached(spark, sfDir)
           .count(); () },
-        () => graft.graph.GraphOps.clearSemanticCc()),
+        () => SessionStore.drop("graph/semantic_cc")),
       // g104's deployed base-label table (its query line item then
       // times the absorb alone)
       ("cache_g104_base_cc",
         () => { graft.graph.GraphOps.incrementalComponents(spark, sfDir)
           .count(); () },
-        () => graft.graph.GraphOps.clearIncrCcBase()),
+        () => SessionStore.drop("graph/incr_cc_base")),
       // g105's deployed base-rank table (its query line item then
       // times the warm-start absorb alone)
       ("cache_g105_base_pr",
         () => { graft.graph.GraphOps.warmStartPagerank(spark, sfDir)
           .count(); () },
-        () => graft.graph.GraphOps.clearIncrPrBase()),
+        () => SessionStore.drop("graph/incr_pr_base")),
       ("cache_media_sigs",
         () => { graft.ext.Multimodal.cachedSignatures(spark, sfDir)
           .count(); () },
-        () => graft.ext.Multimodal.clearCaches()),
+        () => SessionStore.drop("media_sigs")),
       ("cache_s81_incr_index",
         () => { graft.ext.SimilarityOps.ivfPqIncremental(spark, sfDir)
           .count(); () },
-        () => graft.ext.SimilarityOps.clearSavedIndexes("|incr")),
+        () => SessionStore.drop("ivfpq/incr")),
       // s80's artifact write (build-once half of build-once/serve-many;
       // model training is already inside cache_kmeans_model)
       ("cache_s80_index",
         () => { graft.ext.SimilarityOps.ivfPqKnnServed(spark, sfDir)
           .count(); () },
-        () => graft.ext.SimilarityOps.clearSavedIndexes(sfDir)),
+        () => SessionStore.drop("ivfpq/index")),
       // the sparse-tier artifact builds: s87's one-shot inverted index
       // and s88's base-build + append-absorb (both leave the artifact
       // their query line items serve from)
       ("cache_s87_bm25_index",
         () => { graft.ext.SimilarityOps.bm25Served(spark, sfDir)
           .count(); () },
-        () => graft.ext.SimilarityOps.clearSavedIndexes("|bm25")),
+        () => SessionStore.drop("bm25/index")),
       ("cache_s88_bm25_incr",
         () => { graft.ext.SimilarityOps.bm25Incremental(spark, sfDir)
           .count(); () },
-        () => graft.ext.SimilarityOps.clearSavedIndexes("|bm25incr")),
+        () => SessionStore.drop("bm25/incr")),
       // the two compaction rewrites (sparse s96, dense s97): their
       // query line items then time the pure single-segment serve
       ("cache_s96_compact",
         () => { graft.ext.SimilarityOps.bm25Compacted(spark, sfDir)
           .count(); () },
-        () => graft.ext.SimilarityOps.clearSavedIndexes("|bm25compact")),
+        () => SessionStore.drop("bm25/compact")),
       ("cache_s97_compact",
         () => { graft.ext.SimilarityOps.ivfPqCompacted(spark, sfDir)
           .count(); () },
-        () => graft.ext.SimilarityOps.clearSavedIndexes("|ivfpqcompact")),
+        () => SessionStore.drop("ivfpq/compact")),
       // k83's persisted census artifact (base build + batch absorb);
       // the k83 query line item then times the pure serve + eval
       ("cache_k83_census",
         () => { graft.operators.Sketches.incrSketchCensus(spark, sfDir)
           .count(); () },
-        () => graft.operators.Sketches.clearCaches()),
+        () => SessionStore.drop("k83")),
       // d70's persisted corpus window index (d66's base artifact
       // written once); the d70 query line item then times the pure
       // per-batch probe. Targeted clear — the shared dedup frames
-      // stay. (Listed after cache_dedup_frames, whose clearCaches
-      // also drops window indexes.)
+      // stay.
       // extended (not a new line item — the round-12 verdict's
       // warm-growth rule) with d71's tombstone manifest and d72's
       // compaction fold: both are O(index) rewrites riding the same
-      // registry, so the d71/d72 query line items time pure serves
+      // "windex" family, so the d71/d72 query line items time pure serves
       // the warm now carries five builds (base index+census, tombstone
       // manifest — the round-13 advice fix: the sidecar write is no
       // longer inside d71's timed serve — compaction fold, delta
@@ -400,10 +393,7 @@ object Bench {
           timeBuild("ppl_c2_folded") {
             graft.ext.TextOps.pplC2FoldedDir(spark, sfDir) }
           () },
-        // full clearModelSegs is safe HERE because this warm is timed
-        // before cache_ppl_scored below builds its artifact; the
-        // scored warm's own clear is targeted for the same reason
-        () => graft.ext.TextOps.clearModelSegs()),
+        () => SessionStore.drop("segs")),
       // the shared perplexity SCORING pass (reference-LM build +
       // per-occurrence log-probs + per-doc averages), persisted once
       // and served to t75/t77/t78 and e130's batch-side τ derivation —
@@ -412,7 +402,7 @@ object Bench {
       // with no line item of its own
       ("cache_ppl_scored",
         () => { graft.ext.TextOps.pplScoredDir(spark, sfDir); () },
-        () => graft.ext.TextOps.clearPplScored()),
+        () => SessionStore.drop("ppl-scored")),
       // the DSIR selection artifacts (lr model table + the full t76
       // manifest) and the trained tokenizer's full-corpus vocabulary —
       // the cache_ppl_scored treatment applied to the round-15
@@ -427,8 +417,7 @@ object Bench {
           timeBuild("bpe_vocab") {
             graft.ext.TextOps.bpeVocabDir(spark, sfDir) }
           () },
-        () => { graft.ext.TextOps.clearDsirManifest()
-          graft.ext.TextOps.clearBpeVocab() }),
+        () => SessionStore.drop("dsir-manifest", "bpe-vocab")),
       ("cache_d70_window_index",
         () => {
           timeBuild("windex_base") {
@@ -448,7 +437,7 @@ object Bench {
           timeBuild("substring_clean") {
             graft.ext.DedupOps.substringCleanDir(spark, sfDir) }
           () },
-        () => graft.ext.DedupOps.clearWindowIndexes()))
+        () => SessionStore.drop("windex")))
     val rerun = scala.collection.mutable.ArrayBuffer[String]()
     // MIN-of-3 for every warm (round-9 lesson: cache_dedup_frames
     // recorded 6.07 s and 11.85 s across two runs both self-reporting
@@ -487,7 +476,7 @@ object Bench {
           // a REBUILD threw after its clear: restore the cache so the
           // (already-recorded) earlier build's time stays an honest
           // line item — without this the cache would silently rebuild
-          // inside whichever query touches the registry first,
+          // inside whichever query touches the store first,
           // double-incurring a cost no line item shows. If the restore
           // also fails, the item reports failed like any throwing warm.
           val (_, ok3) = timeOnce(warm)
@@ -642,14 +631,6 @@ object Bench {
       .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":"adaptive","contended":$contended,"probe_shuffle":${fmt(probeSecs)}$driftJson$baselineJson,"failed":$failedJson,"rerun":$rerunJson,"queries":$qsTop,"sf":"$sfDir"}""")
-    graft.ext.DedupOps.clearCaches()
-    graft.ext.SimilarityOps.clearCaches()
-    graft.graph.GraphOps.clearCaches()
-    graft.ext.Multimodal.clearCaches()
-    graft.operators.Sketches.clearCaches()
-    graft.ext.TextOps.clearModelSegs()
-    graft.query.FixtureCorpus.clear()
-    graft.ingest.Validation.clearJsonl()
     spark.stop()
   }
 }

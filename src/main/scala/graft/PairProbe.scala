@@ -10,10 +10,10 @@ object PairProbe {
     for (d <- args) {
       time(s"$d sh-warm") { graft.ext.DedupOps.hashedShinglesForProbe(spark, d).count() }
       time(s"$d broadcast") { graft.ext.DedupOps.scoredPairsPlan(spark, d, broadcastArrays = true).count() }
-      graft.ext.DedupOps.clearCaches()
+      SessionStore.clearAll()
       time(s"$d sh-warm2") { graft.ext.DedupOps.hashedShinglesForProbe(spark, d).count() }
       time(s"$d exchange") { graft.ext.DedupOps.scoredPairsPlan(spark, d, broadcastArrays = false).count() }
-      graft.ext.DedupOps.clearCaches()
+      SessionStore.clearAll()
     }
     spark.stop()
   }

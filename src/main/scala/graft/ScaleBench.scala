@@ -310,16 +310,6 @@ object ScaleBench {
     // contribution branches into one drain
     "e135_stream_release_gate" -> "docs")
 
-  private def clearAll(): Unit = {
-    graft.ext.DedupOps.clearCaches()
-    graft.ext.SimilarityOps.clearCaches()
-    graft.graph.GraphOps.clearCaches()
-    graft.ext.Multimodal.clearCaches()
-    graft.operators.Sketches.clearCaches()
-    graft.ext.TextOps.clearModelSegs()
-    graft.query.FixtureCorpus.clear()
-  }
-
   /** (cache line items, query line items) for one volume. `only`
     * (dev): restrict to named line items — cuts the add-one-operator
     * rehearsal loop from the full ~30-item suite to the new entries;
@@ -328,7 +318,7 @@ object ScaleBench {
   private def measure(spark: SparkSession, dir: String,
       only: Option[Set[String]])
       : (Seq[(String, Double)], Seq[(String, Double)]) = {
-    clearAll()
+    SessionStore.clearAll()
     // MIN of 3 clear-and-rebuild cycles per warm — the Bench warm
     // discipline (one-shot build timings swung 2× between clean runs
     // in round 9, and these numbers feed published exponents). The
@@ -351,21 +341,21 @@ object ScaleBench {
     // unselected builds entirely, not just their reporting
     val cacheDefs: Seq[(String, () => Unit, () => Unit)] = Seq(
       ("cache_dedup_frames",
-        // frames-only targeted clear: clearCaches() would also evict
-        // the d70 window index and make list ORDER load-bearing
-        () => graft.ext.DedupOps.clearFrames(),
+        // frames-only targeted drop: the "windex" family (the d70
+        // window index) stays, so list ORDER is not load-bearing
+        () => SessionStore.drop("dedup"),
         () => graft.ext.DedupOps.warm(spark, dir)),
       ("cache_kmeans_model",
-        () => graft.ext.SimilarityOps.clearCaches(),
+        () => SessionStore.drop("kmeans", "pq"),
         () => graft.ext.SimilarityOps.warm(spark, dir)),
       ("cache_graph_edges",
-        () => graft.graph.GraphOps.clearCaches(),
+        () => SessionStore.drop("graph"),
         () => graft.graph.GraphOps.warm(spark, dir)),
       // the s81 incremental-index build: base-4/5 training + O(batch)
       // absorb — its exponent vs embedding growth is the update-path
       // scale claim (serving is the s80 line item)
       ("cache_s81_incr_index",
-        () => graft.ext.SimilarityOps.clearSavedIndexes("|incr"),
+        () => SessionStore.drop("ivfpq/incr"),
         () => {
           graft.ext.SimilarityOps.ivfPqIncremental(spark, dir).count(); () }),
       // the s87 inverted-index build (one corpus scan → postings/df/
@@ -373,23 +363,23 @@ object ScaleBench {
       // BUILD-path scale claim (serving is the s87 query line item,
       // which runs against the artifact this warm leaves behind)
       ("cache_s87_bm25_index",
-        () => graft.ext.SimilarityOps.clearSavedIndexes("|bm25"),
+        () => SessionStore.drop("bm25/index"),
         () => {
           graft.ext.SimilarityOps.bm25Served(spark, dir).count(); () }),
-      // em73's store build + compaction rewrite is cachedAux per
+      // em73's store build + compaction rewrite is store-cached per
       // (session, dir) like em71 — timed as its own min-of-3 build
       // with a targeted clear so the rehearsal measures the store
       // REWRITE, never a cached-frame read (a Heavy median-of-3 would
       // time the cache on runs 2-3 and report a fantasy exponent)
       ("em73_store_compaction",
-        () => graft.query.FixtureCorpus.clearAux("em73"),
+        () => SessionStore.drop("fixture/em73"),
         () => {
           graft.query.EmailOps.compactedStore(spark, dir).count(); () }),
-      // em74's store build + partition-drop retention, cachedAux like
+      // em74's store build + partition-drop retention, cached like
       // em73 — the rehearsal times build+retain, whose scale claim is
       // that the retention step itself is partition-metadata-bounded
       ("em74_store_retention",
-        () => graft.query.FixtureCorpus.clearAux("em74"),
+        () => SessionStore.drop("fixture/em74"),
         () => {
           graft.query.EmailOps.retainedStore(spark, dir).count(); () }),
       // the shared semantic-CC assignment (g103 + d62 both serve from
@@ -402,17 +392,17 @@ object ScaleBench {
       // the compact path (the s96 query line item measures the
       // serve over the result)
       ("cache_s96_compact",
-        () => graft.ext.SimilarityOps.clearSavedIndexes("|bm25compact"),
+        () => SessionStore.drop("bm25/compact"),
         () => {
           graft.ext.SimilarityOps.bm25Compacted(spark, dir).count(); () }),
       // the s97 ANN compaction rewrite (members/codes anti-join +
       // frozen-model copy into a fresh artifact)
       ("cache_s97_compact",
-        () => graft.ext.SimilarityOps.clearSavedIndexes("|ivfpqcompact"),
+        () => SessionStore.drop("ivfpq/compact"),
         () => {
           graft.ext.SimilarityOps.ivfPqCompacted(spark, dir).count(); () }),
       ("cache_semantic_cc",
-        () => graft.graph.GraphOps.clearSemanticCc(),
+        () => SessionStore.drop("graph/semantic_cc"),
         () => {
           graft.graph.GraphOps.semanticComponentsCached(spark, dir)
             .count(); () }),
@@ -420,7 +410,7 @@ object ScaleBench {
       // co-purchase graph) — the build half whose absorb the g104
       // line item measures
       ("cache_g104_base_cc",
-        () => graft.graph.GraphOps.clearIncrCcBase(),
+        () => SessionStore.drop("graph/incr_cc_base"),
         () => {
           graft.graph.GraphOps.incrementalComponents(spark, dir)
             .count(); () }),
@@ -428,29 +418,29 @@ object ScaleBench {
       // the base graph) — the build half whose warm-start absorb the
       // g105 line item measures
       ("cache_g105_base_pr",
-        () => graft.graph.GraphOps.clearIncrPrBase(),
+        () => SessionStore.drop("graph/incr_pr_base"),
         () => {
           graft.graph.GraphOps.warmStartPagerank(spark, dir)
             .count(); () }),
       ("cache_media_sigs",
-        () => graft.ext.Multimodal.clearCaches(),
+        () => SessionStore.drop("media_sigs"),
         () => {
           graft.ext.Multimodal.cachedSignatures(spark, dir).count(); () }),
       // k83's census artifact: base-4/5 sketch build + batch-1/5
       // absorb (one corpus scan each, writes ~#sources rows) — the
       // build-path exponent; the k83 line item times the serve + eval
       ("cache_k83_census",
-        () => graft.operators.Sketches.clearCaches(),
+        () => SessionStore.drop("k83"),
         () => {
           graft.operators.Sketches.incrSketchCensus(spark, dir)
             .count(); () }),
       // d70's persisted window index — the substring tier's
       // build-once half (the serve is the d70 Heavy entry); extended
       // with d71's tombstone manifest + d72's compaction fold (same
-      // registry, O(index) rewrites — the d71/d72 Heavy entries then
+      // "windex" family, O(index) rewrites — the d71/d72 Heavy entries then
       // time pure serves)
       ("cache_d70_window_index",
-        () => graft.ext.DedupOps.clearWindowIndexes(),
+        () => SessionStore.drop("windex"),
         () => { graft.ext.DedupOps.windowIndexDir(spark, dir)
           graft.ext.DedupOps.windexTombstonesDir(spark, dir)
           graft.ext.DedupOps.compactedWindexDir(spark, dir)
@@ -461,7 +451,7 @@ object ScaleBench {
       // base + delta, each O(its own slice) — the t79/t81 Heavy
       // entries then time pure summed-segments serves
       ("cache_model_segments",
-        () => graft.ext.TextOps.clearModelSegs(),
+        () => SessionStore.drop("segs"),
         () => { graft.ext.TextOps.dsirCountsBaseDir(spark, dir)
           graft.ext.TextOps.dsirCountsDeltaDir(spark, dir)
           graft.ext.TextOps.pplC2BaseDir(spark, dir)
@@ -476,7 +466,7 @@ object ScaleBench {
       // e130's batch τ serve from it) — its build IS the old per-call
       // scoring cost, now a data-proportional line item of its own
       ("cache_ppl_scored",
-        () => graft.ext.TextOps.clearPplScored(),
+        () => SessionStore.drop("ppl-scored"),
         () => { graft.ext.TextOps.pplScoredDir(spark, dir); () }))
     val caches = cacheDefs
       .filter { case (name, _, _) => only.forall(_.contains(name)) }
@@ -526,11 +516,10 @@ object ScaleBench {
           SparkEntry.queries(n)(spark, jit).count() }
     } catch { case e: Throwable =>
       System.err.println(s"[scale] JIT pre-warm failed (non-fatal): $e") }
-    clearAll()
+    SessionStore.clearAll()
 
     val (cachesA, queriesA) = measure(spark, dirA, only)
     val (cachesB, queriesB) = measure(spark, dirB, only)
-    clearAll()
 
     def fmt(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))

@@ -51,8 +51,7 @@ object ScaleDecade {
         SparkEntry.queries("t85_release_pipeline")(spark, jit).count()
     } catch { case e: Throwable =>
       System.err.println(s"[decade] JIT pre-warm failed (non-fatal): $e") }
-    graft.ext.DedupOps.clearCaches()
-    graft.ext.TextOps.clearModelSegs()
+    SessionStore.clearAll()
 
     def fmt(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
@@ -76,7 +75,7 @@ object ScaleDecade {
       var best = Double.MaxValue
       var i = 0
       while (i < 3) {
-        graft.ext.DedupOps.clearCaches()
+        SessionStore.drop("dedup", "windex")
         val t0 = System.nanoTime()
         try f() catch { case e: Throwable =>
           System.err.println(s"[decade] FAILED: $e"); return -1.0 }
@@ -91,9 +90,9 @@ object ScaleDecade {
       val items = scala.collection.mutable.ArrayBuffer[(String, Double)]()
       def want(n: String) = only.forall(_.contains(n))
       if (want("candidates") || want("pair_build_d51")) {
-        graft.ext.DedupOps.clearCaches()
+        SessionStore.drop("dedup", "windex")
         val cands = candidateVolume(dir)
-        graft.ext.DedupOps.clearCaches()
+        SessionStore.drop("dedup", "windex")
         items += "candidates" -> cands
       }
       // dedup-warm components, worst-first guarded
@@ -228,10 +227,9 @@ object ScaleDecade {
         items += "t85_release_pipeline" -> Bench.median3(() =>
           Bench.runQuery("t85_release_pipeline",
             SparkEntry.queries("t85_release_pipeline")(spark, dir)))
-        graft.ext.TextOps.clearPplScored()
+        SessionStore.drop("ppl-scored")
       }
-      // clearCaches also drops the window-index artifacts
-      graft.ext.DedupOps.clearCaches()
+      SessionStore.drop("dedup", "windex")
       items.toSeq
     }
 

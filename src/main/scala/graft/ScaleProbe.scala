@@ -15,13 +15,12 @@ object ScaleProbe {
     time("jaccardPairs (d51 exact join)") {
       graft.ext.DedupOps.jaccardPairs(spark, d).count()
     }
-    graft.ext.DedupOps.clearCaches()
+    SessionStore.clearAll()
     time("simhash") { graft.ext.DedupOps.simhash(spark, d).count() }
-    graft.ext.DedupOps.clearCaches()
+    SessionStore.clearAll()
     time("minhashLsh (d52)") {
       graft.ext.DedupOps.minhashLsh(spark, d).count()
     }
-    graft.ext.DedupOps.clearCaches()
     spark.stop()
   }
 }
@@ -38,7 +37,6 @@ object CandidateProbe {
       val c = graft.ext.SimilarityOps.knnGraphCandidates(spark, d)
       println(s"[probe] s84_candidates dir=$d pairs=$c")
     }
-    graft.ext.SimilarityOps.clearCaches()
     spark.stop()
   }
 }

@@ -57,11 +57,9 @@ object SkewProbe {
     } catch { case e: Throwable =>
       System.err.println(s"[skew] JIT pre-warm failed (non-fatal): $e") }
 
-    def clearStores(): Unit = {
-      graft.query.FixtureCorpus.clear()
-      graft.graph.GraphOps.clearCaches()
-    }
-    clearStores()
+    // the store-backed frames this probe times: the fixture corpus and
+    // the graph frames built over it
+    SessionStore.drop("fixture", "graph")
 
     def fmt(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
@@ -110,11 +108,11 @@ object SkewProbe {
     // ---- email tier (vs the skewed-documents corpus)
     locally {
       val (wa, wb) = interleaved(skew, _.min) { dir =>
-        clearStores()
+        SessionStore.drop("fixture", "graph")
         graft.query.FixtureCorpus.store(spark, dir).count(); ()
       }
       items += (("cache_fixture_corpus", wa, wb))
-      clearStores()
+      SessionStore.drop("fixture", "graph")
       // warm both corpora's stores once so query samples are serve-side
       graft.query.FixtureCorpus.store(spark, base).count()
       graft.query.FixtureCorpus.store(spark, skew).count()
@@ -124,7 +122,7 @@ object SkewProbe {
         }
         items += ((q, qa, qb))
       }
-      clearStores()
+      SessionStore.drop("fixture", "graph")
     }
 
     // ---- event tier (vs the skewed-events corpus)
@@ -250,7 +248,7 @@ object SkewProbe {
         items += (("comm_adjacency_gated", qa, qb))
       }
       clearCmTables()
-      clearStores()
+      SessionStore.drop("fixture", "graph")
     }
 
     // ---- the aggregate-split LOSS evidence and the window-sort WIN
@@ -352,7 +350,7 @@ object SkewProbe {
         blobGateEngaged = graft.operators.Salting
           .splitPays(maxEst, bodyB, mapSideCombinable = true)
       }
-      clearStores()
+      SessionStore.drop("fixture", "graph")
       // regime B: 5M rows of ~13-byte elements, 60% hot share —
       // documents-derived directly (the store build isn't what's
       // under test), sender u0 owning the remapped hot ids
@@ -414,7 +412,7 @@ object SkewProbe {
           items += (("topk_window_plain_vs_salted", pa, pb))
         }
       }
-      clearStores()
+      SessionStore.drop("fixture", "graph")
     }
 
     // max key share, measured on both corpora so the report carries
@@ -440,7 +438,6 @@ object SkewProbe {
       java.nio.file.Paths.get("SKEW_DETAIL.json"),
       (line + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () }
-    clearStores()
     spark.stop()
   }
 }

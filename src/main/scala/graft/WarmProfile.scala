@@ -17,9 +17,9 @@ object WarmProfile {
     // rough JVM warm
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     t("dedup_warm_total")(graft.ext.DedupOps.warm(spark, d))
-    graft.ext.DedupOps.clearCaches()
+    SessionStore.clearAll()
     t("dedup_warm_again")(graft.ext.DedupOps.warm(spark, d))
-    graft.ext.DedupOps.clearCaches()
+    SessionStore.clearAll()
     graft.ext.DedupOps.warmProfileLegs(spark, d).foreach { case (n, s) =>
       println(f"[warmprofile] dedup_leg_$n $s%.3f s")
     }

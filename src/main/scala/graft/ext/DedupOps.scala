@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.SessionStore
 import graft.Tables._
 import graft.ext.TextOps.{md5Long, shingles3, tokens}
 
@@ -49,28 +50,11 @@ object DedupOps {
   // ---------------------------------------- shared cached shingle frame
 
   // d51/d53/d55 all start from the same (doc_id, md5Long(shingle)) rows;
-  // materialize it once per (session, dir) and unpersist via clearCaches()
-  // from the harness epilogue — per-query .cache() calls leaked storage
-  // for the session lifetime (round-1 ADVICE).
-  private val frames = new graft.FrameRegistry
-
-  /** Unpersist every frame this object materialized and delete the
-    * persisted window-index artifacts — the clear-EVERYTHING call for
-    * harness epilogues. Bench cache line items must use the TARGETED
-    * clears instead ([[clearFrames]] / [[clearWindowIndexes]]) so one
-    * warm's re-cycle cannot evict another's already-measured cache. */
-  def clearCaches(): Unit = {
-    clearFrames()
-    clearWindowIndexes()
-  }
-
-  /** Targeted clear: only the shared cached frames (the
-    * cache_dedup_frames line item's own state). */
-  private[graft] def clearFrames(): Unit = frames.clear()
+  // materialize it once per (session, dir) as the SessionStore "dedup"
+  // family — per-query .cache() calls leaked storage for the session
+  // lifetime (round-1 ADVICE).
 
   // ------------- persisted window-index artifact (d70's serve side)
-
-  private val windowIndexes = new graft.ArtifactRegistry("graft-windex")
 
   /** The full-corpus (doc_id, pos, hw) window-hash frame, cached per
     * (session, dir) — round-17: the substring tier computed
@@ -80,14 +64,12 @@ object DedupOps {
     * tokenize + rolling-hash stage from the parquet scan. The stage is
     * per-doc stateless, so slicing commutes with it exactly:
     * windowFrame(docs.filter(p)) == corpusWindows.filter(p). One
-    * registry keyed alongside the windex artifacts and cleared with
-    * them ([[clearWindowIndexes]]), so the cache_d70_window_index warm
-    * pays — and re-pays on each of its MIN-of-3 cycles — the one
-    * build, the hashedShingles discipline applied to windows. */
-  private val winFrames = new graft.FrameRegistry
-
+    * frame in the "windex" family, dropped with the windex artifacts,
+    * so the cache_d70_window_index warm pays — and re-pays on each of
+    * its MIN-of-3 cycles — the one build, the hashedShingles
+    * discipline applied to windows. */
   private[graft] def corpusWindows(s: SparkSession, d: String): DataFrame =
-    winFrames.cached(s, d, "winframe")(windowFrame(documents(s, d)))
+    SessionStore.frame(s, d, "windex/frames")(windowFrame(documents(s, d)))
 
   /** Build-or-get the PERSISTED corpus window index — d66's
     * base-segment artifact written once to parquet (the s87/k83
@@ -96,8 +78,7 @@ object DedupOps {
     * table the ingest maintains; here it is built once per
     * (session, dir) and d70 serves from it. */
   private[graft] def windowIndexDir(s: SparkSession, d: String): String =
-    windowIndexes.getOrBuild(
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|windex") {
+    SessionStore.artifact(s, d, "windex") {
       dir =>
         baseWindowIndex(s, d).write.mode("overwrite")
           .parquet(s"$dir/windex")
@@ -111,13 +92,6 @@ object DedupOps {
           .write.mode("overwrite").parquet(s"$dir/census")
     }
 
-  /** Targeted clear: only the persisted window-index artifacts (the
-    * cache_d70_window_index line item's own state). */
-  private[graft] def clearWindowIndexes(): Unit = {
-    windowIndexes.clear()
-    winFrames.clear()
-  }
-
   /** The persisted substring-CLEANED corpus (d68's per-doc frame:
     * doc_id, n_spans_cut, tokens_removed, clean_text) per
     * (session, dir) — the release payload artifact, built once and
@@ -127,8 +101,7 @@ object DedupOps {
     * discipline, cost attributed in the cache_d70_window_index warm's
     * `substring_clean` sub-build). */
   private[graft] def substringCleanDir(s: SparkSession, d: String): String =
-    windowIndexes.getOrBuild(
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|sclean") {
+    SessionStore.artifact(s, d, "windex/sclean") {
       dir =>
         substringCleanDerive(s, d).write.mode("overwrite")
           .parquet(s"$dir/clean")
@@ -146,18 +119,18 @@ object DedupOps {
   /** Cached SimHash signature frame (d53's output; both sides of the
     * d53b band self-join). */
   private def simhashCached(s: SparkSession, d: String): DataFrame =
-    frames.cached(s, d, "sig")(simhash(s, d))
+    SessionStore.frame(s, d, "dedup/sig")(simhash(s, d))
 
   /** Cached d51 pair graph as (src, dst) edges (read three times by the
     * d56 CC path: partition sizing, vertices, edges). */
   private def pairEdgesCached(s: SparkSession, d: String): DataFrame =
-    frames.cached(s, d, "pairs") {
+    SessionStore.frame(s, d, "dedup/pairs") {
       jaccardPairs(s, d).select(col("doc_a").as("src"), col("doc_b").as("dst"))
     }
 
   /** Materialize the shared cached frames (bench pre-warm: their build
     * cost becomes a separately-timed line item instead of being charged
-    * to whichever query hits the registry first). The signature and
+    * to whichever query hits the store first). The signature and
     * pair frames both derive from the (already-cached) shingle frame
     * and are independent of each other, so they build CONCURRENTLY —
     * Spark schedules jobs from both threads and fills scheduler gaps
@@ -228,7 +201,7 @@ object DedupOps {
     hashedShingles(s, d)
 
   private def hashedShingles(s: SparkSession, d: String): DataFrame =
-    frames.cached(s, d, "sh") {
+    SessionStore.frame(s, d, "dedup/sh") {
       shingleRows(s, d).select(col("doc_id"), md5Long(col("shingle")).as("sh"))
     }
 
@@ -311,7 +284,7 @@ object DedupOps {
     * footprint measurably inflated unrelated queries via GC pressure
     * at sf0.1). */
   private def scoredPairsCached(s: SparkSession, d: String): DataFrame =
-    frames.cached(s, d, "scored_pairs") {
+    SessionStore.frame(s, d, "dedup/scored_pairs") {
       scoredPairsPlan(s, d, broadcastArrays = false)
     }
 
@@ -466,7 +439,7 @@ object DedupOps {
     * per-row (doc_id, sh) hashes, exact-verified candidate pairs with
     * true jaccard, UNFILTERED) — d52 applies the ≥0.5 dedup threshold,
     * d60 keeps the whole candidate set to measure the sketch. The
-    * signature and verified frames are registry-cached per
+    * signature and verified frames are store-cached per
     * (session, dir, dict path) so d52 and d60 run the expensive
     * stages once between them. */
   private def lshPipeline(s: SparkSession, d: String, shardDict: Boolean)
@@ -476,14 +449,15 @@ object DedupOps {
     // the raw signature lineage, so one `verified` materialization
     // re-ran the scan→explode→dictionary-join up to 5× (buckets ×2
     // self-join sides, shingle sets ×2, sizes) where the cached
-    // signatures and the registry (doc_id, sh) frame already hold
+    // signatures and the store (doc_id, sh) frame already hold
     // every input it needs. Identical values: hashedShingles' per-row
     // md5Long(shingle) IS the dictionary's `sh` column.
     val tag = if (shardDict) "lsh_sh" else "lsh_bc"
-    val sigsC = frames.cached(s, d, s"$tag.sigs")(lshSigsRaw(s, d, shardDict))
+    val sigsC = SessionStore.frame(s, d, s"dedup/$tag.sigs")(
+      lshSigsRaw(s, d, shardDict))
     val shh = hashedShingles(s, d)
-    (sigsC, shh,
-      frames.cached(s, d, s"$tag.verified")(lshVerifyRaw(sigsC, shh)))
+    (sigsC, shh, SessionStore.frame(s, d, s"dedup/$tag.verified")(
+      lshVerifyRaw(sigsC, shh)))
   }
 
   /** The signature half of the pipeline: per-doc 8-component MinHash
@@ -729,7 +703,7 @@ object DedupOps {
     * threshold. Integer comparisons → exact on both engines. */
   def simhashPairs(s: SparkSession, d: String): DataFrame = {
     // the signature frame feeds both sides of the band self-join; cache
-    // it (via the registry, one row per doc) so the shingle→vote
+    // it (via the store, one row per doc) so the shingle→vote
     // pipeline runs once, not twice
     val sh = simhashCached(s, d)
     val banded = sh.select(col("doc_id"), col("simhash"),
@@ -2212,8 +2186,7 @@ object DedupOps {
     * the cache_d70 warm now charges this build like its siblings and
     * [[windexTombstoneGate]] only reads. Returns the artifact dir. */
   private[graft] def windexTombstonesDir(s: SparkSession, d: String): String =
-    windowIndexes.getOrBuild(
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|windex-tomb") {
+    SessionStore.artifact(s, d, "windex/tomb") {
       dir =>
         documents(s, d).select(col("doc_id").as("base_id"))
           .filter(col("base_id") % 10 === 3)
@@ -2253,8 +2226,7 @@ object DedupOps {
     * anti-join rewrite of the standing rows, O(index), never
     * O(corpus). */
   private[graft] def compactedWindexDir(s: SparkSession, d: String): String =
-    windowIndexes.getOrBuild(
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|windex-compact") {
+    SessionStore.artifact(s, d, "windex/compact") {
       dir =>
         s.read.parquet(s"${windowIndexDir(s, d)}/windex")
           .join(s.read
@@ -2288,8 +2260,7 @@ object DedupOps {
     * Raw rows, deliberately un-capped: the hot decision is GLOBAL and
     * belongs to serve time, where the merged census is authoritative. */
   private[graft] def windexDeltaDir(s: SparkSession, d: String): String =
-    windowIndexes.getOrBuild(
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|windex-delta") {
+    SessionStore.artifact(s, d, "windex/delta") {
       dir =>
         val batchW = corpusWindows(s, d).filter(col("doc_id") % 10 === 4)
         batchW.select(col("hw"), col("doc_id").as("base_id"),
@@ -2373,15 +2344,14 @@ object DedupOps {
     * stays capped, and the oracle reproduces this by filtering the
     * index AFTER the full hot CTE. */
   private[graft] def foldedWindexDir(s: SparkSession, d: String): String =
-    windowIndexes.getOrBuild(
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|windex-fold") {
+    SessionStore.artifact(s, d, "windex/fold") {
       dir =>
         val base = windowIndexDir(s, d)
         val delta = windexDeltaDir(s, d)
         val tomb = s.read
           .parquet(s"${windexTombstonesDir(s, d)}/tombstones").distinct()
         // the census is written FIRST so a reader that races the
-        // registry's publish never sees an index without its mergeable
+        // store's publish never sees an index without its mergeable
         // state — and the hot set is derived by READING IT BACK, so it
         // comes from exactly the published artifact (and the summing
         // group-by runs once, not re-evaluated through lazy lineage
@@ -2426,8 +2396,7 @@ object DedupOps {
     * artifact's generation. Same O(batch) write as [[windexDeltaDir]]:
     * raw windows + own census, the folded base never touched. */
   private[graft] def windexDelta2Dir(s: SparkSession, d: String): String =
-    windowIndexes.getOrBuild(
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|windex-delta2") {
+    SessionStore.artifact(s, d, "windex/delta2") {
       dir =>
         val batchW = corpusWindows(s, d).filter(col("doc_id") % 20 === 9)
         batchW.select(col("hw"), col("doc_id").as("base_id"),

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.SessionStore
 import graft.Tables._
 import graft.ext.TextOps.md5Long
 import graft.functions.BoundedAggs.{Scored, TopKScored}
@@ -467,47 +468,6 @@ object SimilarityOps {
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("cx")))),
         p => p.getField("cx")).as("cv"))
 
-  // the trained model is shared by s66 (census), s67 (serving) and s68
-  // (recall eval) — train once per (session, dir), unpersist from the
-  // harness epilogue
-  private val kmCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, DataFrame)]()
-
-  def clearCaches(): Unit = {
-    kmCache.values.forEach { case (c, a) => c.unpersist(); a.unpersist(); () }
-    kmCache.clear()
-    pqFrames.clear()
-    savedIndexDirs.values.forEach { dir =>
-      deleteDirRecursively(java.nio.file.Paths.get(dir))
-    }
-    savedIndexDirs.clear()
-  }
-
-  /** Drop only the saved-index artifacts whose cache key ends with
-    * `suffix` (targeted bench re-warm: the trained model caches and the
-    * other artifacts stay, so a rebuild of one index cannot silently
-    * push another's build cost into an unrelated query). */
-  private[graft] def clearSavedIndexes(suffix: String): Unit = {
-    val it = savedIndexDirs.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey.endsWith(suffix)) {
-        deleteDirRecursively(java.nio.file.Paths.get(e.getValue))
-        it.remove()
-      }
-    }
-  }
-
-  private def deleteDirRecursively(root: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    try {
-      val all = java.nio.file.Files.walk(root).iterator().asScala.toSeq
-      all.reverseIterator.foreach(p =>
-        try java.nio.file.Files.deleteIfExists(p)
-        catch { case _: java.io.IOException => () })
-    } catch { case _: java.io.IOException => () }
-  }
-
   /** Pre-train the shared models (bench pre-warm line item): the
     * k-means quantizer and the PQ frames (subvectors, codebooks,
     * encodings) — otherwise their one-time build cost lands on
@@ -521,26 +481,31 @@ object SimilarityOps {
   }
 
   /** Train the quantizer: returns (centroids, final assignment), both
-    * cached. */
-  private def kmModel(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    // sessionUUID key for the same reason as FrameRegistry: an
-    // identity hash can alias after the session is GC'd
-    kmCache.computeIfAbsent(
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d", _ => {
-      val e = quantized(s, d).cache()
-      // the training loop shuffles ~corpus×K rows many times; size the
-      // stages to that volume (full width at real scale, narrow on the
-      // fixtures) and materialize the cached model inside the scope
-      graft.operators.Salting.withVolumeShuffle(s, e.count() * kmK) {
+    * cached — the model is shared by s66 (census), s67 (serving) and
+    * s68 (recall eval), trained once per (session, dir). The training
+    * loop shuffles ~corpus×K rows many times; its stages are sized to
+    * that volume (full width at real scale, narrow on the fixtures)
+    * and both frames are materialized inside that scope. */
+  private def kmModel(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    def centroids(train: => DataFrame) =
+      SessionStore.frame(s, d, "kmeans/cent") {
+        val e = train
         var cent = e.filter(col("vec_id") < kmK)
           .select(col("vec_id").as("cid"), col("qv").as("cv"))
         for (_ <- 1 to kmIters) cent = kmMeans(kmAssign(e, cent))
-        val model = (cent.cache(), kmAssign(e, cent).cache())
-        model._1.count(); model._2.count()
-        e.unpersist()
-        model
+        cent
       }
-    })
+    val assigned = SessionStore.frame(s, d, "kmeans/assign") {
+      val e = quantized(s, d).cache()
+      graft.operators.Salting.withVolumeShuffle(s, e.count() * kmK) {
+        val a = kmAssign(e, centroids(e)).cache()
+        a.count()
+        e.unpersist()
+        a
+      }
+    }
+    (centroids(quantized(s, d)), assigned)
+  }
 
   /** Final (post-iteration) assignment of every vector. */
   private def kmFinal(s: SparkSession, d: String): DataFrame =
@@ -719,13 +684,11 @@ object SimilarityOps {
   // `subs` feeds seeds/assign/encode/LUT and `cb` feeds encode+LUT —
   // uncached, Spark re-ran the quantize+explode scan and the Lloyd
   // round once per occurrence
-  private val pqFrames = new graft.FrameRegistry
-
   /** PQ model parts: (subvector frame, trained codebooks, per-vector
     * encodings). Shared by s69 (codes) and s70 (ADC serving). */
   private def pqParts(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val subs = pqFrames.cached(s, d, "pqsubs") {
+    val subs = SessionStore.frame(s, d, "pq/subs") {
       quantized(s, d)
         .select(col("vec_id"), explode(array((0 until pqM).map(j =>
           struct(lit(j).as("j"),
@@ -733,7 +696,7 @@ object SimilarityOps {
         .select(col("vec_id"), col("s.j").as("j"), col("s.sv").as("sv"))
     }
     // seeds: the first pqK vectors' subvectors, per subspace
-    val cb = pqFrames.cached(s, d, "pqcb") {
+    val cb = SessionStore.frame(s, d, "pq/cb") {
       val seeds = subs.filter(col("vec_id") < pqK)
         .select(col("j"), col("vec_id").as("cid"), col("sv").as("cv"))
       // one Lloyd round: integer argmin assign → integer-rounded means
@@ -754,7 +717,7 @@ object SimilarityOps {
     }
     // encode: nearest codeword per subspace (the persisted "index" a
     // real deployment would store — cached for the same reason)
-    val enc = pqFrames.cached(s, d, "pqenc") {
+    val enc = SessionStore.frame(s, d, "pq/enc") {
       subs.join(broadcast(cb), Seq("j"))
         .withColumn("d2", dist2(col("sv"), col("cv")))
         .groupBy("vec_id", "j")
@@ -931,18 +894,9 @@ object SimilarityOps {
 
   // ------------------------------- s80 persisted-index IVF-PQ serving
 
-  /** Saved-index artifact dirs per (session, dir): built + written
-    * once, reloaded by every serving call. Deleted by [[clearCaches]]
-    * (File.deleteOnExit cannot remove a non-empty directory, so
-    * relying on it would leak one 4-table artifact per JVM). The
-    * build runs OUTSIDE the map's compute: a multi-second Spark job
-    * inside ConcurrentHashMap.computeIfAbsent would hold the bin lock
-    * against unrelated keys; the builder lock below serializes only
-    * the build itself, and a lost data race costs one redundant
-    * build, never a wrong result. */
-  private val savedIndexDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val indexBuildLock = new Object
+  // Saved-index artifacts are the SessionStore "ivfpq" and "bm25"
+  // families: built + written once per (session, dir), reloaded by
+  // every serving call.
 
   /** Write the trained IVF-PQ index as a 4-table parquet artifact —
     * coarse centroids, cell membership, PQ codebooks, per-vector
@@ -975,17 +929,8 @@ object SimilarityOps {
     * shared by s80 and s94 (the tombstone op must mutate the SAME
     * artifact s80 serves from for the sidecar-invisibility claim to
     * mean anything). */
-  private def builtIndexDir(s: SparkSession, d: String): String = {
-    val key = s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d"
-    indexBuildLock.synchronized {
-      Option(savedIndexDirs.get(key)).getOrElse {
-        val dir = graft.Fs.scratchTempDir("graft-ivfpq-index")
-        saveIvfPqIndex(s, d, dir.toString)
-        savedIndexDirs.put(key, dir.toString)
-        dir.toString
-      }
-    }
-  }
+  private def builtIndexDir(s: SparkSession, d: String): String =
+    SessionStore.artifact(s, d, "ivfpq/index")(saveIvfPqIndex(s, d, _))
 
   /** The "serve many" half shared by s80/s81/s94: probe + LUT + ADC
     * top-k run entirely from a saved artifact dir. With
@@ -1062,69 +1007,62 @@ object SimilarityOps {
   /** Build-or-get the incremental artifact (base-4/5-trained frozen
     * model + absorbed batch rows) — shared by s81's serving and d64's
     * ingest-time semantic-dedup gate. */
-  private def incrIndexDir(s: SparkSession, d: String): String = {
-    val key = s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|incr"
-    indexBuildLock.synchronized {
-      Option(savedIndexDirs.get(key)).getOrElse {
-        val dir = graft.Fs.scratchTempDir("graft-ivfpq-incr").toString
-        val b = incrBase(s, d)
-        val e = quantized(s, d).cache()
-        val base = e.filter(col("vec_id") < b)
-        val batch = e.filter(col("vec_id") >= b)
-        // ---- build on base (the "already deployed" index)
-        var cent = base.filter(col("vec_id") < kmK)
-          .select(col("vec_id").as("cid"), col("qv").as("cv"))
-        for (_ <- 1 to kmIters) cent = kmMeans(kmAssign(base, cent))
-        cent = cent.localCheckpoint() // freeze: 2·kmIters-job lineage
-        def subsOf(df: DataFrame) = df
-          .select(col("vec_id"), explode(array((0 until pqM).map(j =>
-            struct(lit(j).as("j"),
-              slice(col("qv"), j * pqSub + 1, pqSub).as("sv"))): _*)).as("s"))
-          .select(col("vec_id"), col("s.j").as("j"), col("s.sv").as("sv"))
-        val baseSubs = subsOf(base)
-        val seeds = baseSubs.filter(col("vec_id") < pqK)
-          .select(col("j"), col("vec_id").as("cid"), col("sv").as("cv"))
-        val assigned = baseSubs.join(broadcast(seeds), Seq("j"))
-          .withColumn("d2", dist2(col("sv"), col("cv")))
-          .groupBy("vec_id", "j", "sv")
-          .agg(min(struct(col("d2"), col("cid"))).as("m"))
-          .select(col("vec_id"), col("j"), col("sv"), col("m.cid").as("cid"))
-        val cb = assigned
-          .select(col("j"), col("cid"),
-            posexplode(col("sv")).as(Seq("pos", "x")))
-          .groupBy("j", "cid", "pos")
-          .agg(expr("CASE WHEN sum(x) >= 0" +
-            " THEN (2 * sum(x) + count(1)) div (2 * count(1))" +
-            " ELSE -((-2 * sum(x) + count(1)) div (2 * count(1))) END")
-            .as("cx"))
-          .groupBy("j", "cid")
-          .agg(transform(
-            array_sort(collect_list(struct(col("pos"), col("cx")))),
-            p => p.getField("cx")).as("cv"))
-          .localCheckpoint()
-        def encodeWith(subs: DataFrame) = subs.join(broadcast(cb), Seq("j"))
-          .withColumn("d2", dist2(col("sv"), col("cv")))
-          .groupBy("vec_id", "j")
-          .agg(min(struct(col("d2"), col("cid"))).as("m"))
-          .select(col("vec_id"), col("j"), col("m.cid").as("cid"))
-        cent.write.mode("overwrite").parquet(s"$dir/centroids")
-        cb.write.mode("overwrite").parquet(s"$dir/codebooks")
-        kmAssign(base, cent).select("vec_id", "cid")
-          .write.mode("overwrite").parquet(s"$dir/members")
-        encodeWith(baseSubs)
-          .write.mode("overwrite").parquet(s"$dir/codes")
-        // ---- absorb the new batch against the FROZEN model: appended
-        // rows only — the four base files above are never rewritten
-        kmAssign(batch, cent).select("vec_id", "cid")
-          .write.mode("append").parquet(s"$dir/members")
-        encodeWith(subsOf(batch))
-          .write.mode("append").parquet(s"$dir/codes")
-        e.unpersist()
-        savedIndexDirs.put(key, dir)
-        dir
-      }
+  private def incrIndexDir(s: SparkSession, d: String): String =
+    SessionStore.artifact(s, d, "ivfpq/incr") { dir =>
+      val b = incrBase(s, d)
+      val e = quantized(s, d).cache()
+      val base = e.filter(col("vec_id") < b)
+      val batch = e.filter(col("vec_id") >= b)
+      // ---- build on base (the "already deployed" index)
+      var cent = base.filter(col("vec_id") < kmK)
+        .select(col("vec_id").as("cid"), col("qv").as("cv"))
+      for (_ <- 1 to kmIters) cent = kmMeans(kmAssign(base, cent))
+      cent = cent.localCheckpoint() // freeze: 2·kmIters-job lineage
+      def subsOf(df: DataFrame) = df
+        .select(col("vec_id"), explode(array((0 until pqM).map(j =>
+          struct(lit(j).as("j"),
+            slice(col("qv"), j * pqSub + 1, pqSub).as("sv"))): _*)).as("s"))
+        .select(col("vec_id"), col("s.j").as("j"), col("s.sv").as("sv"))
+      val baseSubs = subsOf(base)
+      val seeds = baseSubs.filter(col("vec_id") < pqK)
+        .select(col("j"), col("vec_id").as("cid"), col("sv").as("cv"))
+      val assigned = baseSubs.join(broadcast(seeds), Seq("j"))
+        .withColumn("d2", dist2(col("sv"), col("cv")))
+        .groupBy("vec_id", "j", "sv")
+        .agg(min(struct(col("d2"), col("cid"))).as("m"))
+        .select(col("vec_id"), col("j"), col("sv"), col("m.cid").as("cid"))
+      val cb = assigned
+        .select(col("j"), col("cid"),
+          posexplode(col("sv")).as(Seq("pos", "x")))
+        .groupBy("j", "cid", "pos")
+        .agg(expr("CASE WHEN sum(x) >= 0" +
+          " THEN (2 * sum(x) + count(1)) div (2 * count(1))" +
+          " ELSE -((-2 * sum(x) + count(1)) div (2 * count(1))) END")
+          .as("cx"))
+        .groupBy("j", "cid")
+        .agg(transform(
+          array_sort(collect_list(struct(col("pos"), col("cx")))),
+          p => p.getField("cx")).as("cv"))
+        .localCheckpoint()
+      def encodeWith(subs: DataFrame) = subs.join(broadcast(cb), Seq("j"))
+        .withColumn("d2", dist2(col("sv"), col("cv")))
+        .groupBy("vec_id", "j")
+        .agg(min(struct(col("d2"), col("cid"))).as("m"))
+        .select(col("vec_id"), col("j"), col("m.cid").as("cid"))
+      cent.write.mode("overwrite").parquet(s"$dir/centroids")
+      cb.write.mode("overwrite").parquet(s"$dir/codebooks")
+      kmAssign(base, cent).select("vec_id", "cid")
+        .write.mode("overwrite").parquet(s"$dir/members")
+      encodeWith(baseSubs)
+        .write.mode("overwrite").parquet(s"$dir/codes")
+      // ---- absorb the new batch against the FROZEN model: appended
+      // rows only — the four base files above are never rewritten
+      kmAssign(batch, cent).select("vec_id", "cid")
+        .write.mode("append").parquet(s"$dir/members")
+      encodeWith(subsOf(batch))
+        .write.mode("append").parquet(s"$dir/codes")
+      e.unpersist()
     }
-  }
 
   // --- helpers exposed for d64 (registered in DedupOps): the
   // ingest-time semantic-dedup gate runs against the SAME frozen
@@ -1195,16 +1133,9 @@ object SimilarityOps {
     * actually touches (the em73 affected-partition discipline). */
   def ivfPqCompacted(s: SparkSession, d: String): DataFrame = {
     val src = builtIndexDir(s, d)
-    val key =
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|ivfpqcompact"
-    val idx = indexBuildLock.synchronized {
-      Option(savedIndexDirs.get(key)).getOrElse {
-        ivfPqDeleteCohort(s, src)
-        val dir = graft.Fs.scratchTempDir("graft-ivfpq-compact").toString
-        compactIvfPq(s, src, dir)
-        savedIndexDirs.put(key, dir)
-        dir
-      }
+    val idx = SessionStore.artifact(s, d, "ivfpq/compact") { dir =>
+      ivfPqDeleteCohort(s, src)
+      compactIvfPq(s, src, dir)
     }
     serveAdcFromArtifact(s, d, idx, dropTombstones = false)
   }
@@ -2232,17 +2163,8 @@ object SimilarityOps {
     * e108's frozen df/stats sidecars (round 16: the stream twin was
     * re-running the corpus tokenization per call to derive sidecars
     * the served artifact already carries). */
-  private[graft] def bm25IndexDir(s: SparkSession, d: String): String = {
-    val key = s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|bm25"
-    indexBuildLock.synchronized {
-      Option(savedIndexDirs.get(key)).getOrElse {
-        val dir = graft.Fs.scratchTempDir("graft-bm25-index")
-        saveBm25Index(s, d, dir.toString)
-        savedIndexDirs.put(key, dir.toString)
-        dir.toString
-      }
-    }
-  }
+  private[graft] def bm25IndexDir(s: SparkSession, d: String): String =
+    SessionStore.artifact(s, d, "bm25/index")(saveBm25Index(s, d, _))
 
   /** The shared artifact read path behind every served-BM25 variant:
     * query terms prune the postings scan (pushed `In`), df/corpus
@@ -2338,21 +2260,13 @@ object SimilarityOps {
   /** The two-segment incremental artifact (base 4/5 + absorbed 1/5),
     * built once per (session, dir) — shared by s88 (delta serving),
     * s95 (tombstone deletes) and s96 (compaction). */
-  private def bm25IncrDir(s: SparkSession, d: String): String = {
-    val key =
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|bm25incr"
-    indexBuildLock.synchronized {
-      Option(savedIndexDirs.get(key)).getOrElse {
-        val dir = graft.Fs.scratchTempDir("graft-bm25-incr").toString
-        val docs = graft.Tables.documents(s, d)
-        val b = docs.count() * 4 / 5
-        appendBm25Batch(docs.filter(col("doc_id") < b), dir)
-        appendBm25Batch(docs.filter(col("doc_id") >= b), dir)
-        savedIndexDirs.put(key, dir)
-        dir
-      }
+  private def bm25IncrDir(s: SparkSession, d: String): String =
+    SessionStore.artifact(s, d, "bm25/incr") { dir =>
+      val docs = graft.Tables.documents(s, d)
+      val b = docs.count() * 4 / 5
+      appendBm25Batch(docs.filter(col("doc_id") < b), dir)
+      appendBm25Batch(docs.filter(col("doc_id") >= b), dir)
     }
-  }
 
   // ------------------------------- s100 BM25 index health census
 
@@ -2493,16 +2407,9 @@ object SimilarityOps {
     * merge. */
   def bm25Compacted(s: SparkSession, d: String): DataFrame = {
     val src = bm25IncrDir(s, d)
-    val key =
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|bm25compact"
-    val idx = indexBuildLock.synchronized {
-      Option(savedIndexDirs.get(key)).getOrElse {
-        bm25DeleteCohort(s, src)
-        val dir = graft.Fs.scratchTempDir("graft-bm25-compact").toString
-        compactBm25(s, src, dir)
-        savedIndexDirs.put(key, dir)
-        dir
-      }
+    val idx = SessionStore.artifact(s, d, "bm25/compact") { dir =>
+      bm25DeleteCohort(s, src)
+      compactBm25(s, src, dir)
     }
     serveBm25From(s, idx, sumDeltas = false, dropTombstones = false)
   }

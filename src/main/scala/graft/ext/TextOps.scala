@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.SessionStore
 import graft.Tables._
 
 /** Text-analysis operators for a training-data pipeline over the
@@ -1717,13 +1718,11 @@ object TextOps {
 
   // ------------ t79 DSIR model DELTA ABSORB (O(batch) estimator tier)
 
-  /** Registry for the model-tier segment artifacts: t79's DSIR
-    * per-bucket count segments and t81's reference-LM bigram-count
-    * segments (the s88/d73 LSM discipline applied to the two model
-    * artifacts that — round-14 verdict — were the last place the repo
-    * answered a new batch with a full corpus rescan). */
-  private val modelSegs = new graft.ArtifactRegistry("graft-modelsegs")
-  def clearModelSegs(): Unit = modelSegs.clear()
+  // The model-tier segment artifacts — t79's DSIR per-bucket count
+  // segments and t81's reference-LM bigram-count segments — are the
+  // SessionStore "segs" family (the s88/d73 LSM discipline applied to
+  // the two model artifacts that — round-14 verdict — were the last
+  // place the repo answered a new batch with a full corpus rescan).
 
   /** The BASE count segment: [[dsirCountsOf]] over the standing corpus
     * (doc_id % 5 != 4 — the k83/d58 absorb split), persisted once as a
@@ -1740,9 +1739,8 @@ object TextOps {
     * scan). The standalone delta/retract builders below keep their
     * O(batch)/O(cohort) slice scans — an absorb-only lifecycle still
     * never pays a corpus scan. */
-  private[graft] def dsirCountsBaseDir(s: SparkSession, d: String): String = {
-    val uuid = org.apache.spark.sql.graft.Bridge.sessionUUID(s)
-    modelSegs.getOrBuild(s"$uuid|$d|dsir-base") { dir =>
+  private[graft] def dsirCountsBaseDir(s: SparkSession, d: String): String =
+    SessionStore.artifact(s, d, "segs/dsir-base") { dir =>
       val cohorts = Seq(
         "base" -> (col("doc_id") % 5 =!= 4),
         "delta" -> (col("doc_id") % 5 === 4),
@@ -1760,19 +1758,17 @@ object TextOps {
             col(s"t_$tag").as("tcnt"))
           .write.mode("overwrite").parquet(s"$target/counts")
       wr(dir, "base")
-      modelSegs.getOrBuild(s"$uuid|$d|dsir-delta")(wr(_, "delta"))
-      modelSegs.getOrBuild(s"$uuid|$d|dsir-retract")(wr(_, "retr"))
+      SessionStore.artifact(s, d, "segs/dsir-delta")(wr(_, "delta"))
+      SessionStore.artifact(s, d, "segs/dsir-retract")(wr(_, "retr"))
       ()
     }
-  }
 
   /** The DELTA count segment: the new crawl batch (doc_id % 5 == 4)
     * aggregated to its own ≤ m-row count table — the absorb step,
     * O(batch): the scan reads the batch slice only, the base segment
     * is never touched. */
   private[graft] def dsirCountsDeltaDir(s: SparkSession, d: String): String =
-    modelSegs.getOrBuild(
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|dsir-delta") {
+    SessionStore.artifact(s, d, "segs/dsir-delta") {
       dir =>
         dsirCountsOf(dsirFeaturesOf(
           documents(s, d).filter(col("doc_id") % 5 === 4)))
@@ -1821,8 +1817,7 @@ object TextOps {
     * the model tier. */
   private[graft] def dsirCountsRetractDir(s: SparkSession, d: String)
       : String =
-    modelSegs.getOrBuild(
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|dsir-retract") {
+    SessionStore.artifact(s, d, "segs/dsir-retract") {
       dir =>
         dsirCountsOf(dsirFeaturesOf(
           documents(s, d).filter(col("doc_id") % 10 === 7)))
@@ -1902,8 +1897,7 @@ object TextOps {
     * scan. */
   private[graft] def dsirCountsFoldedDir(s: SparkSession, d: String)
       : String =
-    modelSegs.getOrBuild(
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|dsir-folded") {
+    SessionStore.artifact(s, d, "segs/dsir-folded") {
       dir =>
         s.read.parquet(s"${dsirCountsBaseDir(s, d)}/counts")
           .unionByName(s.read.parquet(s"${dsirCountsDeltaDir(s, d)}/counts"))
@@ -2078,8 +2072,7 @@ object TextOps {
     * attributed `cache_dsir_manifest` warm line item; t74 remains the
     * honest from-scratch estimator+scorer entry. */
   private[graft] def dsirManifestDir(s: SparkSession, d: String): String =
-    modelSegs.getOrBuild(
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|dsir-manifest") {
+    SessionStore.artifact(s, d, "dsir-manifest") {
       dir =>
         dsirLr(s, d).write.mode("overwrite").parquet(s"$dir/lr")
         // score with the model collected from the just-written lr
@@ -2107,18 +2100,13 @@ object TextOps {
   private[graft] def dsirModelCached(s: SparkSession, d: String): Array[Long] =
     dsirModelOf(s.read.parquet(s"${dsirManifestDir(s, d)}/lr"))
 
-  /** Targeted clear for the selection artifact alone (the warm
-    * re-time contract — see [[clearPplScored]]). */
-  def clearDsirManifest(): Unit = modelSegs.clearMatching("|dsir-manifest")
-
   /** The full-corpus trained-tokenizer VOCABULARY (w, n) persisted per
     * (session, dir) — the t66 merge induction's input, shared by the
     * two entries that account a SUBSET corpus under the one trained
     * tokenizer (t80's apply, t85's release census). Same attributed-
     * warm discipline as [[dsirManifestDir]]. */
   private[graft] def bpeVocabDir(s: SparkSession, d: String): String =
-    modelSegs.getOrBuild(
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|bpe-vocab") {
+    SessionStore.artifact(s, d, "bpe-vocab") {
       dir =>
         documents(s, d)
           .select(explode(tokens(col("text"))).as("w"))
@@ -2128,9 +2116,6 @@ object TextOps {
 
   private[graft] def bpeVocabCached(s: SparkSession, d: String): DataFrame =
     s.read.parquet(s"${bpeVocabDir(s, d)}/vocab")
-
-  /** Targeted clear for the vocabulary artifact alone. */
-  def clearBpeVocab(): Unit = modelSegs.clearMatching("|bpe-vocab")
 
   /** Oracle: re-derives the weights (t74's CTEs), the max-normalized
     * acceptance ppm, the md5 coin, and the ENTIRE fixed-schedule rank
@@ -2623,8 +2608,7 @@ object TextOps {
     * served to its four consumers (t75's verdict, t77's calibration,
     * t78's calibrated filter, e130's batch-side τ derivation). */
   private[graft] def pplScoredDir(s: SparkSession, d: String): String =
-    modelSegs.getOrBuild(
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|ppl-scored") {
+    SessionStore.artifact(s, d, "ppl-scored") {
       dir =>
         // the reference LM tables land in the same artifact: the
         // stream twins (e127/e128/e130/e135) pin their vocab-bounded
@@ -2662,11 +2646,6 @@ object TextOps {
   /** Serve the persisted scored frame (building it on first touch). */
   private[graft] def pplScoredCached(s: SparkSession, d: String): DataFrame =
     s.read.parquet(s"${pplScoredDir(s, d)}/scored")
-
-  /** Targeted clear for the scored artifact alone — the warm re-time
-    * contract (a full [[clearModelSegs]] would also drop the t79/t81
-    * segment artifacts other line items already paid for). */
-  def clearPplScored(): Unit = modelSegs.clearMatching("|ppl-scored")
 
   /** The UNORDERED per-doc scored frame (doc_id, lang, n_bigrams,
     * avg_nlp_micro) — t75's whole scoring pass without the
@@ -2759,8 +2738,7 @@ object TextOps {
     // one corpus bigram pass fills all three cohort segments — the
     // [[dsirCountsBaseDir]] rationale verbatim (the en-filter commutes
     // with the cohort split; a cohort keeps exactly its nonzero rows)
-    val uuid = org.apache.spark.sql.graft.Bridge.sessionUUID(s)
-    modelSegs.getOrBuild(s"$uuid|$d|ppl-base") { dir =>
+    SessionStore.artifact(s, d, "segs/ppl-base") { dir =>
       val cohorts = Seq(
         "base" -> (col("doc_id") % 5 =!= 4),
         "delta" -> (col("doc_id") % 5 === 4),
@@ -2776,8 +2754,8 @@ object TextOps {
           .select(col("w1"), col("w2"), col(s"c_$tag").as("c2"))
           .write.mode("overwrite").parquet(s"$target/c2")
       wr(dir, "base")
-      modelSegs.getOrBuild(s"$uuid|$d|ppl-delta")(wr(_, "delta"))
-      modelSegs.getOrBuild(s"$uuid|$d|ppl-retract")(wr(_, "retr"))
+      SessionStore.artifact(s, d, "segs/ppl-delta")(wr(_, "delta"))
+      SessionStore.artifact(s, d, "segs/ppl-retract")(wr(_, "retr"))
       ()
     }
   }
@@ -2785,8 +2763,7 @@ object TextOps {
   /** The DELTA LM segment: the new batch's en-slice bigram counts
     * (doc_id % 5 == 4) — the absorb step, O(batch). */
   private[graft] def pplC2DeltaDir(s: SparkSession, d: String): String =
-    modelSegs.getOrBuild(
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|ppl-delta") {
+    SessionStore.artifact(s, d, "segs/ppl-delta") {
       dir =>
         bigramRowsOf(documents(s, d).filter(col("doc_id") % 5 === 4))
           .filter(col("lang") === "en")
@@ -2834,8 +2811,7 @@ object TextOps {
     * artifact its documents contributed to, so the two retract
     * segments share the cohort by design. */
   private[graft] def pplC2RetractDir(s: SparkSession, d: String): String =
-    modelSegs.getOrBuild(
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|ppl-retract") {
+    SessionStore.artifact(s, d, "segs/ppl-retract") {
       dir =>
         bigramRowsOf(documents(s, d).filter(col("doc_id") % 10 === 7))
           .filter(col("lang") === "en")
@@ -2917,8 +2893,7 @@ object TextOps {
     * shift every add-one-smoothed score. O(segments · vocab²) count
     * rows, never the corpus text. */
   private[graft] def pplC2FoldedDir(s: SparkSession, d: String): String =
-    modelSegs.getOrBuild(
-      s"${org.apache.spark.sql.graft.Bridge.sessionUUID(s)}|$d|ppl-folded") {
+    SessionStore.artifact(s, d, "segs/ppl-folded") {
       dir =>
         s.read.parquet(s"${pplC2BaseDir(s, d)}/c2")
           .unionByName(s.read.parquet(s"${pplC2DeltaDir(s, d)}/c2"))

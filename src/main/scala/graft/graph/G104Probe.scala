@@ -13,9 +13,9 @@ object G104Probe {
     }
     GraphOps.warm(s, d) // cache_graph_edges' builds incl. baseEdges
     for (r <- 1 to 3) {
-      GraphOps.clearIncrCcBase()
+      graft.SessionStore.drop("graph/incr_cc_base")
       val cc = t { GraphOps.incrementalComponents(s, d).count() }
-      GraphOps.clearIncrPrBase()
+      graft.SessionStore.drop("graph/incr_pr_base")
       val pr = t { GraphOps.warmStartPagerank(s, d).count() }
       println(f"[g104probe] run$r g104_cc $cc%.3f s  g105_pr $pr%.3f s")
     }

@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.SessionStore
 import graft.Tables._
 import graft.ingest.EmailIngest
 import graft.store.EmailStore
@@ -25,11 +26,7 @@ object GraphOps {
     * SQL closure oracle, dense enough for non-trivial components. */
   // six driver queries (g92–g97) start from the same edge frame; the
   // lineitem self-join + distinct is the expensive part, so cache it
-  // per (session, dir) in the shared registry
-  private val frames = new graft.FrameRegistry
-
-  def clearCaches(): Unit = frames.clear()
-
+  // per (session, dir) in the SessionStore "graph" family
   /** Materialize the shared edge frame (bench pre-warm line item). */
   def warm(s: SparkSession, d: String): Unit = {
     copurchaseEdges(s, d).count()
@@ -48,7 +45,7 @@ object GraphOps {
   }
 
   private def copurchaseEdges(s: SparkSession, d: String): DataFrame =
-    frames.cached(s, d, "edges") {
+    SessionStore.frame(s, d, "graph/edges") {
       val hi = lineitem(s, d).filter(col("l_quantity") >= 48)
         .select("l_orderkey", "l_partkey")
       hi.toDF("l_orderkey", "p1")
@@ -132,15 +129,15 @@ object GraphOps {
   }
 
   /** The BASE-graph edge frame (orders with l_orderkey % 5 != 0),
-    * registry-cached: g104's base CC and g105's base PR each ran the
+    * store-cached: g104's base CC and g105's base PR each ran the
     * same lineitem self-join from scratch (round-17: one build instead
     * of two). Warmed — and therefore timed — under the
-    * cache_graph_edges line item, whose re-time cycles clear the whole
-    * graph registry; the g104/g105 warms' targeted clears deliberately
+    * cache_graph_edges line item, whose re-time cycles drop the whole
+    * "graph" family; the g104/g105 warms' targeted clears deliberately
     * leave it in place, so their MIN-of-3 times the CC/PR build alone
     * and the edge build's cost stays attributed to cache_graph_edges. */
   private def baseEdges(s: SparkSession, d: String): DataFrame =
-    frames.cached(s, d, "base_edges") {
+    SessionStore.frame(s, d, "graph/base_edges") {
       copurchaseEdgesWhere(s, d, col("l_orderkey") % 5 =!= 0)
     }
 
@@ -149,12 +146,10 @@ object GraphOps {
     * s81/s88/d58), cached per (session, dir). This is the artifact a
     * deployment maintains; g104's line item times the ABSORB. */
   private def incrCcBase(s: SparkSession, d: String): DataFrame =
-    frames.cached(s, d, "incr_cc_base") {
+    SessionStore.frame(s, d, "graph/incr_cc_base") {
       EmailGraph.componentsLargeSmallStar(s,
         baseEdges(s, d).toDF("src", "dst"))
     }
-
-  private[graft] def clearIncrCcBase(): Unit = frames.drop("incr_cc_base|")
 
   /** The g104 absorb: fold a new edge batch into an existing
     * component labeling WITHOUT recomputing over the corpus. New
@@ -227,13 +222,13 @@ object GraphOps {
     * query. `rank div deg` per edge equals the per-source contribution
     * joined onto each edge, so results are bit-identical. */
   private def prVerts(s: SparkSession, d: String): DataFrame =
-    frames.cached(s, d, "prverts") {
+    SessionStore.frame(s, d, "graph/prverts") {
       val e = copurchaseEdges(s, d)
       e.select(col("p1").as("id")).union(e.select(col("p2"))).distinct()
     }
 
   private def prEdgeDeg(s: SparkSession, d: String): DataFrame =
-    frames.cached(s, d, "predgedeg") {
+    SessionStore.frame(s, d, "graph/predgedeg") {
       val e = copurchaseEdges(s, d).toDF("src", "dst")
       e.join(e.groupBy("src").agg(count(lit(1)).as("deg")), "src")
         .select("src", "dst", "deg")
@@ -299,7 +294,7 @@ object GraphOps {
     lit(prScale * 15 / 100)
 
   def pagerankFixed(s: SparkSession, d: String): DataFrame = {
-    // registry-cached shared operands; the rename projection on top is
+    // store-cached shared operands; the rename projection on top is
     // free — a second .cache() here held a duplicate copy
     val ed = prEdgeDeg(s, d)
     withVolumeShuffle(s, ed.count()) {
@@ -388,7 +383,7 @@ object GraphOps {
     * deployment maintains; g105's line item times the warm-start
     * ABSORB over the updated graph. */
   private def incrPrBase(s: SparkSession, d: String): DataFrame =
-    frames.cached(s, d, "incr_pr_base") {
+    SessionStore.frame(s, d, "graph/incr_pr_base") {
       val e = baseEdges(s, d).toDF("src", "dst")
       val ed = e.join(e.groupBy("src").agg(count(lit(1)).as("deg")), "src")
         .select("src", "dst", "deg")
@@ -397,8 +392,6 @@ object GraphOps {
       prSteps(verts.withColumn("rank", lit(prScale)).localCheckpoint(true),
         ed, prIters, uniformTeleport)
     }
-
-  private[graft] def clearIncrPrBase(): Unit = frames.drop("incr_pr_base|")
 
   /** g105: WARM-START PageRank maintenance — the g104/s81 absorb
     * contract on the rank tier: a new day of orders perturbs the
@@ -598,13 +591,10 @@ object GraphOps {
     * cache_email_threads warm line item. */
   private[graft] def emailThreadAssignment(s: SparkSession, d: String)
       : DataFrame =
-    frames.cached(s, d, "email_threads") {
+    SessionStore.frame(s, d, "graph/email_threads") {
       EmailGraph.assignThreadIds(s, graft.query.FixtureCorpus.store(s, d))
         .select(col("dedupe_key"), col("thread_id"))
     }
-
-  private[graft] def clearEmailThreads(): Unit =
-    frames.drop("email_threads|")
 
   val emailThreadsSql: String =
     s"""${graft.query.FixtureCorpus.sqlPrelude}
@@ -681,15 +671,15 @@ object GraphOps {
   def triangleCounts(s: SparkSession, d: String): DataFrame =
     trianglesCached(s, d)._2
 
-  /** Registry-cached triangle pipeline outputs — g95 serves the counts
+  /** Store-cached triangle pipeline outputs — g95 serves the counts
     * directly and g101 derives coefficients from (deg, counts), so the
     * degree aggregate, orientation, and wedge-closing joins (the
     * expensive part of both queries) run once per (session, dir). */
   private def trianglesCached(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
     lazy val built = trianglesWithDeg(copurchaseEdges(s, d))
-    (frames.cached(s, d, "tri.deg")(built._1),
-      frames.cached(s, d, "tri.counts")(built._2))
+    (SessionStore.frame(s, d, "graph/tri.deg")(built._1),
+      SessionStore.frame(s, d, "graph/tri.counts")(built._2))
   }
 
   /** Degree-ordered triangle counting over (p1, p2) undirected distinct
@@ -1055,25 +1045,23 @@ object GraphOps {
   def semanticComponents(s: SparkSession, d: String): DataFrame =
     semanticComponentsCached(s, d).orderBy("vec_id")
 
-  /** The cached (vec_id, component) assignment behind g103 — registry
+  /** The cached (vec_id, component) assignment behind g103 — store-
     * cached per (session, dir) because TWO driver entries ride it
     * (g103's census and d62's representative selection) and the build
     * is the iterative large-star/small-star loop: without the cache,
     * every d62 call would re-run the whole CC job the g103 line item
     * already times. Its one-time cost is the `cache_semantic_cc`
-    * bench/rehearsal warm line item; [[clearSemanticCc]] is that
-    * warm's targeted re-time clear. */
+    * bench/rehearsal warm line item; dropping "graph/semantic_cc" is
+    * that warm's targeted re-time clear. */
   private[graft] def semanticComponentsCached(s: SparkSession,
       d: String): DataFrame =
-    frames.cached(s, d, "semantic_cc") {
+    SessionStore.frame(s, d, "graph/semantic_cc") {
       EmailGraph.componentsLargeSmallStar(s,
         graft.ext.SimilarityOps.ivfKnnGraph(s, d)
           .filter(col("cosine") >= graft.ext.DedupOps.semTau)
           .select(col("vec_id").as("src"), col("nbr_id").as("dst")))
         .select(col("id").as("vec_id"), col("component"))
     }
-
-  def clearSemanticCc(): Unit = frames.drop("semantic_cc|")
 
   // LAZY: composed from SimilarityOps' SQL and read by DedupOps'
   // d62 oracle during ITS initializer — a plain val here closes an

@@ -253,7 +253,7 @@ object EmailOps {
   private def deleteTree(root: String): Unit = graft.Fs.deleteTree(root)
 
   def realIngest(s: SparkSession, d: String): DataFrame =
-    FixtureCorpus.cachedAux(s, d, "em71") {
+    graft.SessionStore.frame(s, d, "fixture/em71") {
       import java.nio.file.{Files, Paths}
       val cap = 2000L
       val base = graft.Fs.scratchTempDir("graft-em71").toString
@@ -327,7 +327,7 @@ object EmailOps {
     * doc_id < 1000 on both sides (em71's bounded-file-count rule;
     * em71 covers depth-contract strays, this covers the transport). */
   def httpIngest(s: SparkSession, d: String): DataFrame =
-    FixtureCorpus.cachedAux(s, d, "em72") {
+    graft.SessionStore.frame(s, d, "fixture/em72") {
       import java.nio.file.{Files, Path, Paths}
       val cap = 1000L
       val base = graft.Fs.scratchTempDir("graft-em72").toString
@@ -463,7 +463,7 @@ object EmailOps {
     * in-query from a driver-side metadata walk, so a silent no-op
     * compaction also fails the gate. */
   def compactedStore(s: SparkSession, d: String): DataFrame =
-    FixtureCorpus.cachedAux(s, d, "em73") {
+    graft.SessionStore.frame(s, d, "fixture/em73") {
       val docs = FixtureCorpus.parsedDocs(s, d)
         .withColumn("date",
           expr("timestampadd(MONTH, CAST(doc_id % 12 AS INT), date)"))
@@ -525,7 +525,7 @@ object EmailOps {
     * contract — spec-pinned in Round15Spec, with the KeyIndex
     * self-heal path for a re-inserted expired key. */
   def retainedStore(s: SparkSession, d: String): DataFrame =
-    FixtureCorpus.cachedAux(s, d, "em74") {
+    graft.SessionStore.frame(s, d, "fixture/em74") {
       val docs = FixtureCorpus.parsedDocs(s, d)
         .withColumn("date",
           expr("timestampadd(MONTH, CAST(doc_id % 12 AS INT), date)"))

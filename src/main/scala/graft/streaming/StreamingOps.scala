@@ -62,32 +62,30 @@ object StreamingOps {
 
   /** Stage a single parquet file behind a temp directory — the
     * file-stream source requires a DIRECTORY, not a file. Staging dirs
-    * are cached per (d, name): repeated invocations (bench median-of-3
-    * runs every streaming query 3×) reuse one staged dir instead of
-    * accumulating fresh ones for the JVM's lifetime.
+    * are SessionStore artifacts per (session, d, name): repeated
+    * invocations (bench median-of-3 runs every streaming query 3×)
+    * reuse one staged dir instead of accumulating fresh ones.
     *
     * `events.parquet` whose `ts` is a real timestamp (current driver
     * testdata) is REWRITTEN through [[graft.Tables.events]] so the
     * staged file carries the engine's LongType epoch-nanos clock — the
     * declared [[eventsSchema]]; older nanos-long files (and non-events
-    * tables) stage as a plain symlink. One-time cost per (dir, file)
-    * per JVM, and only on the conversion path. */
-  private val stagedDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-  private def stageFile(spark: SparkSession, d: String, name: String): String =
-    stagedDirs.computeIfAbsent((d, name), { _ =>
-      val dir = scratchTempDir("graft-stream-src")
+    * tables) stage as a plain symlink. One-time cost per
+    * (session, dir, file), and only on the conversion path. */
+  private[graft] def stageFile(spark: SparkSession, d: String,
+      name: String): String =
+    graft.SessionStore.artifact(spark, d, s"stream/$name") { dir =>
       val needsRewrite = name == "events.parquet" &&
         graft.Tables.t(spark, d, "events").schema("ts").dataType !=
           org.apache.spark.sql.types.LongType
       if (needsRewrite)
         graft.Tables.events(spark, d)
-          .coalesce(1).write.mode("overwrite").parquet(dir.toString)
+          .coalesce(1).write.mode("overwrite").parquet(dir)
       else
-        Files.createSymbolicLink(dir.resolve(name),
+        Files.createSymbolicLink(java.nio.file.Paths.get(dir, name),
           java.nio.file.Paths.get(d, name).toAbsolutePath)
-      dir.toString
-    })
+      ()
+    }
 
   /** Input-volume probes cached per (dir, tag): the count only sizes
     * the drain's state partitioning (and is stable per fixture dir), so
@@ -132,7 +130,7 @@ object StreamingOps {
     * files are deleted once the next drain for the SAME (dir, query)
     * begins; keying by query name alone would let a drain against one
     * fixture dir invalidate a still-lazy result frame from another.
-    * Keys carry the session UUID (like FrameRegistry): two sessions
+    * Keys carry the session UUID (like SessionStore keys): two sessions
     * draining the same (dir, query) must not delete each other's
     * still-referenced files. The last dir per key lives until JVM
     * exit (tmpfs, sink-sized). */
@@ -369,12 +367,10 @@ object StreamingOps {
   // would be silently incomplete. One sentinel event per side pushes
   // both watermarks past every real event, so eviction (and the outer
   // output) completes before processAllAvailable returns. Cached per
-  // dir (bench runs the query 3×).
-  private val sentinelDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // (session, dir) (bench runs the query 3×).
   private def stageWithSentinel(spark: SparkSession, d: String): String =
-    sentinelDirs.computeIfAbsent(d, { _ =>
-      val dir = scratchTempDir("graft-stream-sentinel")
+    graft.SessionStore.artifact(spark, d, "stream/sentinel") { out =>
+      val dir = java.nio.file.Paths.get(out)
       // reuse the normalized staged file (symlink on the passthrough
       // path) so the sentinel batch and the corpus share one ts clock
       val staged = java.nio.file.Paths.get(
@@ -398,9 +394,8 @@ object StreamingOps {
       Seq((-1L, far, -1L, "error", 0.0, "{}"),
           (-2L, far, -2L, "click", 0.0, "{}"))
         .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("append").parquet(dir.toString)
-      dir.toString
-    })
+        .coalesce(1).write.mode("append").parquet(out)
+    }
 
   /** e100: watermarked stream-stream LEFT OUTER interval join — errors
     * with NO click in the preceding 10 minutes (the alerting complement
@@ -775,13 +770,11 @@ object StreamingOps {
     * ~identical slices each run was pure fixed overhead; the slices
     * are a deterministic function of the fixture, so symlinking the
     * cached files preserves every semantic of a fresh write). */
-  private val sliceFilesCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (java.nio.file.Path, java.nio.file.Path, java.nio.file.Path)]()
   private def sliceFiles(spark: SparkSession, d: String)
-      : (java.nio.file.Path, java.nio.file.Path, java.nio.file.Path) =
-    sliceFilesCache.computeIfAbsent(
-      org.apache.spark.sql.graft.Bridge.sessionUUID(spark) + "|" + d, { _ =>
-      val dir = scratchTempDir("graft-restart-slices")
+      : (java.nio.file.Path, java.nio.file.Path, java.nio.file.Path) = {
+    val dir = java.nio.file.Paths.get(graft.SessionStore.artifact(
+        spark, d, "stream/restart-slices") { out =>
+      val dir = java.nio.file.Paths.get(out)
       val ev = graft.Tables.events(spark, d)
       val r = ev.agg(min("ts"), max("ts")).head()
       val (mn, mx) = (r.getLong(0), r.getLong(1))
@@ -798,10 +791,14 @@ object StreamingOps {
       val sentinel = Seq((-1L, far, -1L, "error", 0.0, "{}"),
           (-2L, far, -2L, "click", 0.0, "{}"))
         .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      (one("s1", ev.filter(col("ts") <= cut)),
-        one("s2", ev.filter(col("ts") > cut)),
-        one("sent", sentinel))
+      one("s1", ev.filter(col("ts") <= cut))
+      one("s2", ev.filter(col("ts") > cut))
+      one("sent", sentinel)
+      ()
     })
+    (dir.resolve("s1.parquet"), dir.resolve("s2.parquet"),
+      dir.resolve("sent.parquet"))
+  }
 
   /** Two-slice staging for the restart twins: slice 1 is present from
     * the start; invoking the returned thunk adds slice 2 — plus the
@@ -1010,19 +1007,19 @@ object StreamingOps {
     * event time: the CM aggregate is order-free, so the restart proof
     * deliberately uses the harshest arrival split (interleaved ids,
     * no watermark semantics to lean on). */
-  private val docSliceCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (java.nio.file.Path, java.nio.file.Path)]()
   private def docSliceFiles(spark: SparkSession, d: String)
-      : (java.nio.file.Path, java.nio.file.Path) =
-    docSliceCache.computeIfAbsent(
-      org.apache.spark.sql.graft.Bridge.sessionUUID(spark) + "|" + d, { _ =>
-      val dir = scratchTempDir("graft-doc-slices")
+      : (java.nio.file.Path, java.nio.file.Path) = {
+    val dir = java.nio.file.Paths.get(graft.SessionStore.artifact(
+        spark, d, "stream/doc-slices") { out =>
       val docs = spark.read.parquet(s"$d/documents.parquet")
-      (graft.Fs.writeSingleParquet(docs.filter(col("doc_id") % 2 === 0),
-        dir.resolve("s1.parquet")),
-        graft.Fs.writeSingleParquet(docs.filter(col("doc_id") % 2 === 1),
-          dir.resolve("s2.parquet")))
+      graft.Fs.writeSingleParquet(docs.filter(col("doc_id") % 2 === 0),
+        java.nio.file.Paths.get(out, "s1.parquet"))
+      graft.Fs.writeSingleParquet(docs.filter(col("doc_id") % 2 === 1),
+        java.nio.file.Paths.get(out, "s2.parquet"))
+      ()
     })
+    (dir.resolve("s1.parquet"), dir.resolve("s2.parquet"))
+  }
 
   /** e121: e120's CM cell maintenance stopped mid-corpus and RESUMED
     * from its checkpoint — the FIFTH restart state shape (after e104

@@ -268,12 +268,12 @@ class Round18Spec extends AnyFunSuite with SparkSpec {
       val d1 = graft.ext.DedupOps.windowIndexDir(spark, dir)
       val d2 = graft.ext.DedupOps.windowIndexDir(spark, dir)
       assert(d1 === d2, "the artifact must be reused, not rebuilt")
-      graft.ext.DedupOps.clearWindowIndexes()
+      SessionStore.drop("windex")
       assert(!new java.io.File(d1).exists(),
-        "clearWindowIndexes must delete the artifact dir")
+        "dropping the windex family must delete the artifact dir")
     } finally {
       // in the finally so a failed assertion cannot leak the artifact
-      graft.ext.DedupOps.clearWindowIndexes()
+      SessionStore.drop("windex")
       Fs.deleteTree(dir)
     }
   }

@@ -231,10 +231,9 @@ class Round21Spec extends AnyFunSuite with SparkSpec {
     assert(a !== c, "distinct models must not compare equal")
   }
 
-  // shared-registry hygiene: these suites run in one JVM — drop the
+  // shared-store hygiene: these suites run in one JVM — drop the
   // artifacts this suite built so no temp dirs leak past the run
   test("zz cleanup (not a behavior test)") {
-    TextOps.clearModelSegs()
-    DedupOps.clearCaches()
+    SessionStore.clearAll()
   }
 }

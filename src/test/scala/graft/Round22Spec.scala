@@ -172,9 +172,8 @@ class Round22Spec extends AnyFunSuite with SparkSpec {
       "V over the merged table's keys ≡ rebuild V")
   }
 
-  // shared-registry hygiene: drop what this suite built
+  // shared-store hygiene: drop what this suite built
   test("zz cleanup (not a behavior test)") {
-    TextOps.clearModelSegs()
-    graft.ext.DedupOps.clearCaches()
+    SessionStore.clearAll()
   }
 }

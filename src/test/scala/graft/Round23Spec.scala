@@ -72,8 +72,7 @@ class Round23Spec extends AnyFunSuite with SparkSpec {
   }
 
   test("the persisted DSIR selection artifact serves the same model and manifest the per-call derive computes") {
-    graft.ext.TextOps.clearDsirManifest()
-    graft.ext.TextOps.clearBpeVocab()
+    SessionStore.drop("dsir-manifest", "bpe-vocab")
     try {
       // model: cached lr collect == from-scratch estimator collect
       val cached = graft.ext.TextOps.dsirModelCached(spark, d)
@@ -103,8 +102,7 @@ class Round23Spec extends AnyFunSuite with SparkSpec {
         .collect().map(_.toSeq).toSet
       assert(vocabServed == vocabInline, "vocab artifact != inline")
     } finally {
-      graft.ext.TextOps.clearDsirManifest()
-      graft.ext.TextOps.clearBpeVocab()
+      SessionStore.drop("dsir-manifest", "bpe-vocab")
     }
   }
 

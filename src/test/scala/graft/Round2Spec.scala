@@ -55,11 +55,11 @@ class Round2Spec extends AnyFunSuite with SparkSpec {
 
   test("d52 dictionary path auto-selects by estimated dictionary size") {
     // plan shapes asserted on the RAW (uncached) pipeline — the query
-    // sites serve registry-cached frames after first touch, and the
+    // sites serve store-cached frames after first touch, and the
     // CacheManager rewrites ANY matching plan (hints are erased in the
     // canonical form) to the InMemoryRelation, so drop the cached
     // frames first to see the real join shapes
-    DedupOps.clearCaches()
+    SessionStore.drop("dedup", "windex")
     val (_, _, small) = DedupOps.lshPipelineRaw(spark, sf, shardDict = false)
     small.collect()
     val smallPlan = small.queryExecution.executedPlan.toString

@@ -15,6 +15,10 @@ object SparkSpec {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    .config("spark.ui.enabled", "false")
+    // pinned at Spark's defaults: the upsert files-per-month contract
+    // (Round23Spec) rests on AQE's REBALANCE advisory-size packing
+    .config("spark.sql.adaptive.enabled", "true")
+    .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
     .getOrCreate()
 }
